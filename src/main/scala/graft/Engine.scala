@@ -94,14 +94,47 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     }
   }
 
-  /** Full store scan (GET /documents). */
-  def documents(): DataFrame =
-    if (storeExists) spark.read.parquet(storePath)
-    else spark.emptyDataFrame
-      .select(lit(0L).as("doc_id"), lit("").as("source"),
-        lit(0).as("chunk_ix"), lit("").as("content"),
-        array().cast("array<float>").as("embedding"))
-      .limit(0)
+  /** The store relation [[documents]] last resolved, with the listing
+    * it was resolved against.
+    */
+  @volatile private var resolved
+      : Option[(Seq[(String, Long, Long)], DataFrame)] = None
+
+  /** Name, length and mtime of every entry in the store directory: one
+    * Hadoop `listStatus`, no Spark job. A missing directory lists empty.
+    */
+  private def storeListing: Seq[(String, Long, Long)] = {
+    val hPath = new org.apache.hadoop.fs.Path(storePath)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try fs.listStatus(hPath).toSeq
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Full store scan (GET /documents). The resolved relation is reused
+    * while the store directory's listing is unchanged, so a read costs
+    * one FS listing instead of a probe plus schema inference. The key
+    * is the listing, not this Engine's own writes: an append by another
+    * Engine on the same path, or a delete's directory swap, changes it.
+    * The listing is taken BEFORE the read, so a write racing the read
+    * can only make the kept relation newer than its key, and the next
+    * call resolves again. A failed probe throws and keeps nothing.
+    */
+  def documents(): DataFrame = {
+    val listing = storeListing
+    resolved.collect { case (l, df) if l == listing => df }.getOrElse {
+      val df =
+        if (storeExists) spark.read.parquet(storePath)
+        else spark.emptyDataFrame
+          .select(lit(0L).as("doc_id"), lit("").as("source"),
+            lit(0).as("chunk_ix"), lit("").as("content"),
+            array().cast("array<float>").as("embedding"))
+          .limit(0)
+      resolved = Some((listing, df))
+      df
+    }
+  }
 
   def countDocuments(): Long = documents().count()
 
@@ -235,7 +268,9 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
   }
 
   /** POST /search — embed the query, cosine top-k over the index,
-    * enrich with content: (doc_id, score, content).
+    * enrich with content: (doc_id, score, content) in rank order, score
+    * descending, ties on doc_id ascending (the reference sorts its
+    * results the same way, server.js:58-60).
     */
   def search(query: String, k: Int = 1): DataFrame = {
     import spark.implicits._
@@ -244,6 +279,10 @@ class Engine(spark: SparkSession, storePath: String, dim: Int = 64,
     val hits = Search.topK(index(), qv, "doc_id", "embedding", "qe", k)
     Search.enrich(hits, documents().select("doc_id", "content"), "doc_id")
       .select("doc_id", "score", "content")
+      // the limit cuts nothing (the join keeps <= k rows) but plans the
+      // sort as a TakeOrderedAndProject on the join's output; a bare
+      // orderBy adds a range-partitioning exchange and two more jobs
+      .orderBy(col("score").desc, col("doc_id")).limit(k)
   }
 
   /** Batched search: many queries in ONE plan — per-query top-k via the

@@ -5,15 +5,17 @@ package graft
   * reference file that had no running equivalent. Deliberately thin:
   * every route is a one-line delegation to the [[Engine]] method that
   * already mirrors it call-for-call, the server is the JDK's built-in
-  * `com.sun.net.httpserver` (public, dependency-free), and nothing here
-  * is on the bench or oracle path. A production deployment would put a
-  * real HTTP stack in front of `Engine` the same one-line-per-route way.
+  * `com.sun.net.httpserver` (public, dependency-free). It is what the
+  * `perfbench` benchmark drives; the oracle-checked queries do not use
+  * it. A production deployment would put a real HTTP stack in front of
+  * `Engine` the same one-line-per-route way.
   *
   * Route parity (reference file:line):
   *  - `POST /add` {content}            → addDocument      (server.js:102)
   *  - `GET /count-documents`           → countDocuments   (server.js:127)
   *  - `GET /load-documents?dir=`       → loadDocuments    (server.js:161)
-  *  - `POST /search` {query, k}        → search + answer  (server.js:217)
+  *  - `POST /search` {query, k}        → search, answer = top hit
+  *                                       (server.js:217)
   *  - `GET /documents`                 → documents        (server.js:271)
   *  - `GET /`                          → minimal HTML UI  (server.js:280)
   *
@@ -92,6 +94,14 @@ final class Server(engine: Engine, port: Int = 0) {
 
   // ---- routes ---------------------------------------------------------
 
+  /** [[Engine.search]]'s rank order over its (doc_id, score, content)
+    * rows: score descending with NaN first, as Spark sorts it, then
+    * doc_id ascending.
+    */
+  private val byRank: Ordering[org.apache.spark.sql.Row] =
+    Ordering.by[org.apache.spark.sql.Row, Double](_.getDouble(1))(
+      Ordering.Double.TotalOrdering.reverse).orElseBy(_.getLong(0))
+
   private def reply(ex: HttpExchange, status: Int, contentType: String,
                     body: String): Unit = {
     val bytes = body.getBytes("UTF-8")
@@ -155,15 +165,22 @@ final class Server(engine: Engine, port: Int = 0) {
       case None | Some("") => // reference server.js:220
         json(ex, 400, """{"error":"Query is required"}""")
       case Some(q) =>
-        val k = jsonInt(body, "k").getOrElse(1) // reference default k=1
-        val hits = engine.search(q, k).collect().map { r =>
-          s"""{"doc_id":${r.getLong(0)},"score":${r.getDouble(1)},""" +
-            s""""content":"${esc(r.getString(2))}"}"""
+        jsonInt(body, "k").getOrElse(1) match { // reference default k=1
+          case k if k < 1 =>
+            json(ex, 400, """{"error":"k must be a positive integer"}""")
+          case k =>
+            // one search; ranked here, not by row position, because an
+            // Engine subclass may return its hits in any order
+            val hits = engine.search(q, k).collect().sorted(byRank)
+            val answer = hits.headOption.fold("")(_.getString(2))
+            val results = hits.map { r =>
+              s"""{"doc_id":${r.getLong(0)},"score":${r.getDouble(1)},""" +
+                s""""content":"${esc(r.getString(2))}"}"""
+            }
+            json(ex, 200,
+              s"""{"query":"${esc(q)}","answer":"${esc(answer)}",""" +
+                s""""results":[${results.mkString(",")}]}""")
         }
-        val answer = engine.answer(q)
-        json(ex, 200,
-          s"""{"query":"${esc(q)}","answer":"${esc(answer)}",""" +
-            s""""results":[${hits.mkString(",")}]}""")
     }
   })
 

@@ -1435,8 +1435,13 @@ object Ann {
           .bitwiseAND(lit((1L << bbMax) - 1)).as("fb"))
       .localCheckpoint()
     val deltaHist = deltaFine.groupBy("fb").agg(count(lit(1)).as("cnt"))
+    // LOAD-BEARING: the eager localCheckpoint is what materializes the
+    // fold HERE, so checkedHist's inline raise_error fires inside this
+    // call, before any consumer sees wrong-width data. Making it lazy
+    // (or dropping it) would defer the width guard to whichever caller
+    // first forces the frame. Model-sized; reused by counts AND verdict.
     val folded = foldOccupancyHistogram(checkedHist, deltaHist)
-      .localCheckpoint() // model-sized; reused by counts AND verdict
+      .localCheckpoint()
     val bMask = lit((1L << bucketBits) - 1)
     val checkedBucket = when(
       col("bucket") < 0 || col("bucket") >= (1L << bucketBits),

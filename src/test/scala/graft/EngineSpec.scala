@@ -99,6 +99,17 @@ class EngineSpec extends SparkSpec {
     assert(ctx.startsWith("1. ") && ctx.contains("\n2. "))
   }
 
+  test("search returns its hits in rank order: score desc, doc_id asc") {
+    val e = freshEngine
+    e.loadDocuments(corpusDir)
+    Seq("john likes tea", "john likes beer", "tea and beer")
+      .foreach(t => assert(e.addDocument(t) == 1))
+    val got = e.search("john likes tea", k = 4).collect()
+      .map(r => (r.getDouble(1), r.getLong(0))).toSeq
+    assert(got.length == 4)
+    assert(got == got.sortBy { case (s, id) => (-s, id) }, got)
+  }
+
   test("searchAll answers many queries in one plan, per-query ranked") {
     val e = freshEngine
     e.loadDocuments(corpusDir)
@@ -198,6 +209,93 @@ class EngineSpec extends SparkSpec {
     assert(e.search("anything", k = 1).count() == 0)
     assert(e.addDocument("now it has content") > 0)
     assert(e.countDocuments() == 1)
+  }
+
+  /** Spark jobs started while `f` runs. The listener bus delivers
+    * events in order and late, so `f` is bracketed by two marker jobs
+    * and its jobs are counted once the closing marker has arrived.
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-open"); f; marker("jobs-close")
+      Iterator.continually(Option(
+          groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("a marker job never reached the listener")))
+        .dropWhile(_ != "jobs-open").drop(1)
+        .takeWhile(_ != "jobs-close").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("documents() reuses the resolved store while its listing is " +
+      "unchanged: a repeat call runs no Spark job") {
+    val e = freshEngine
+    assert(e.addDocument("john likes tea") == 1)
+    val first = e.documents()
+    assert(jobsDuring(e.documents()) == 0)
+    assert(e.documents() eq first)
+    // an empty store is kept too
+    val empty = freshEngine
+    empty.documents()
+    assert(jobsDuring(empty.documents()) == 0)
+    // a write changes the listing: the store is resolved again
+    assert(e.addDocument("john likes beer") == 1)
+    assert(!(e.documents() eq first))
+    assert(e.countDocuments() == 2)
+  }
+
+  test("documents() sees writes made by another Engine on the same " +
+      "store: appends and a delete's rewrite") {
+    import spark.implicits._
+    val store = Files.createTempDirectory("graft_shared").toString + "/store"
+    def engine = new Engine(spark, store, dim = 64, chunkSize = 40,
+      overlap = 10)
+    val reader = engine
+    val writer = engine
+    def ids = reader.documents().select("doc_id").as[Long].collect()
+      .sorted.toSeq
+    assert(reader.countDocuments() == 0)
+    assert(writer.addDocument("john likes tea") == 1)
+    assert(reader.countDocuments() == 1)
+    assert(writer.addDocument("john likes beer") == 1)
+    assert(writer.addDocument("data visualization dashboards") == 1)
+    assert(reader.countDocuments() == 3 && ids == Seq(1L, 2L, 3L))
+    assert(writer.deleteDocuments(Seq(2L)) == 1)
+    assert(reader.countDocuments() == 2 && ids == Seq(1L, 3L))
+    assert(reader.documents().select("content").as[String].collect()
+      .toSet == Set("john likes tea", "data visualization dashboards"))
+  }
+
+  test("a store holding a corrupt part file throws on every read and " +
+      "is never kept") {
+    val dir = Files.createTempDirectory("graft_corrupt_store")
+    val part = dir.resolve("part-00000-corrupt.snappy.parquet")
+    Files.write(part, Array.tabulate[Byte](256)(i => (i * 7).toByte))
+    val e = new Engine(spark, dir.toString)
+    def aboutPart(t: Throwable) = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(part.toString))
+    for (_ <- 1 to 2) {
+      assert(aboutPart(intercept[Exception](e.documents())))
+      assert(aboutPart(intercept[Exception](e.countDocuments())))
+    }
+    // the failure was not kept: once the file is gone the store reads
+    // as empty
+    Files.delete(part)
+    assert(e.countDocuments() == 0)
   }
 
   test("long documents chunk with overlap and remain searchable") {

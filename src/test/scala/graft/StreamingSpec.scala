@@ -88,14 +88,16 @@ class StreamingSpec extends SparkSpec {
     */
   private def writeBatchFile(dir: String, i: Int,
                              rows: org.apache.spark.sql.DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("graft_batchfile").toString
-    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get.toPath
-    val dest = java.nio.file.Paths.get(dir, s"batch$i.parquet")
-    Files.move(part, dest)
-    Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 10000L))
+    val tmp = Files.createTempDirectory("graft_batchfile").toFile
+    try {
+      rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val dest = java.nio.file.Paths.get(dir, s"batch$i.parquet")
+      Files.move(part, dest)
+      Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 10000L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
   test("dropDuplicatesWithinWatermark evicts state and re-emits old keys") {
